@@ -1157,6 +1157,30 @@ def test_mp4_box_walk_metadata_exact(spark):
     assert fr["status"] == "no_codec"  # frames = demuxer territory
 
 
+def test_mp4_truncated_mvhd_is_a_value_error():
+    """An mvhd box too short for the fields it is read for (v0: 20-byte
+    body up to duration; v1: 32) at the very end of the payload is a
+    typed ValueError, never a leaked struct.error/IndexError."""
+    from win64_local_ocr_tool_spark.kernels.mp4meta import (
+        _box,
+        parse_mp4_meta,
+    )
+
+    ftyp = _box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
+    bodies = (
+        b"\x00\x00\x00\x00" + struct.pack(">IIII", 0, 0, 1000, 1234),
+        b"\x01\x00\x00\x00" + struct.pack(">QQIQ", 0, 0, 1000, 1234),
+    )
+    for full in bodies:
+        for n in range(len(full)):
+            payload = ftyp + _box(b"moov", _box(b"mvhd", full[:n]))
+            with pytest.raises(ValueError, match="truncated mvhd"):
+                parse_mp4_meta(payload)
+        # the bound is exact: the shortest complete body parses
+        payload = ftyp + _box(b"moov", _box(b"mvhd", full))
+        assert parse_mp4_meta(payload)["duration_ms"] == 1234
+
+
 def test_flac_streaminfo_metadata(spark):
     """FLAC STREAMINFO walk: exact bit-field unpacking (20-bit rate,
     3-bit channels, 5-bit depth, 36-bit sample count), duration math,

@@ -393,3 +393,45 @@ def test_resume_detects_count_equal_content_divergence(spark, staged, tmp_path):
     assert _corpus_fingerprint(spark, str(work2)) == _corpus_fingerprint(
         spark, str(root / "work")
     )
+
+
+def test_mixed_vintage_lineage_resume(spark, staged, tmp_path):
+    """ADVICE r5: a lineage dir mixing markers written before the ``fp``
+    column existed with newer appends reads through the explicit
+    schema — old rows show fp NULL, new rows their fingerprint, never
+    depending on which footer inference would pick. A resume over it
+    validates the old markers by count alone, the new ones by
+    fingerprint too, and skips every stage."""
+    from pyspark.sql import functions as F
+
+    from win64_local_ocr_tool_spark.lineage import read_lineage
+
+    root, stats = staged
+    markers = spark.read.parquet(str(root / "lineage"))
+    old_stages = ["curate_exact", "curate_minhash_sig"]
+    old = markers.filter(F.col("stage").isin(old_stages)).drop("fp")
+    new = markers.filter(~F.col("stage").isin(old_stages))
+
+    only_old = str(tmp_path / "old")
+    old.write.parquet(only_old)
+    assert [r["fp"] for r in read_lineage(spark, only_old).collect()] == [
+        None, None,
+    ]
+
+    mixed = str(tmp_path / "mixed")
+    old.write.parquet(mixed)
+    new.write.mode("append").parquet(mixed)
+    fps = {
+        r["stage"]: r["fp"]
+        for r in read_lineage(spark, mixed).select("stage", "fp").collect()
+    }
+    assert len(fps) == len(stats["stages"])
+    assert all((fps[s] is None) == (s in old_stages) for s in fps), fps
+
+    again = run_curation_staged(
+        spark, SF, str(root / "work"),
+        benchmark_dir=str(root / "bench"),
+        lineage_dir=mixed,
+        resume=True,
+    )
+    assert all(s.get("resumed") for s in again["stages"].values())

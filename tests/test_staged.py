@@ -244,3 +244,23 @@ def test_bootstrap_error_classification():
     ]
     for exc in other:
         assert not _is_missing_table_error(exc), exc
+
+
+def test_merge_by_key_writes_one_file_per_key(spark, tmp_path):
+    """The parquet fallback clusters rows by key before the partitioned
+    write: 4 input partitions over 8 keys give one file per key, not one
+    per (task, key)."""
+    from win64_local_ocr_tool_spark.staged import merge_by_key
+
+    target = tmp_path / "stage"
+    df = spark.range(0, 400, numPartitions=4).select(
+        (F.col("id") % 8).cast("int").alias("partition_key"),
+        F.col("id").cast("string").alias("v"),
+    )
+    merge_by_key(df, str(target))
+    files = {
+        k: len(list((target / f"partition_key={k}").glob("*.parquet")))
+        for k in range(8)
+    }
+    assert files == dict.fromkeys(range(8), 1)
+    assert spark.read.parquet(str(target)).count() == 400

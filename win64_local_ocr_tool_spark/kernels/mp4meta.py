@@ -91,7 +91,10 @@ def parse_mp4_meta(payload: bytes) -> dict:
     if mvhd is None:
         raise ValueError("moov without mvhd")
     vs, _ve = mvhd
-    version = payload[vs]
+    # the fields read end at duration: byte 20 of a v0 body, 32 of v1
+    version = payload[vs] if vs < _ve else None
+    if vs + (32 if version == 1 else 20) > _ve:
+        raise ValueError("truncated mvhd")
     if version == 1:
         timescale = struct.unpack_from(">I", payload, vs + 20)[0]
         duration = struct.unpack_from(">Q", payload, vs + 24)[0]

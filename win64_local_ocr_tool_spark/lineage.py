@@ -42,11 +42,14 @@ def with_partition_key(df: DataFrame, n_buckets: int, key: str = "url") -> DataF
 
 
 def read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
+    """The checkpoint table, read with the explicit ``LINEAGE_SCHEMA``:
+    files appended before a column existed (``fp``) read it as NULL
+    every time, whichever file's footer inference would have picked."""
     if not os.path.isdir(lineage_dir) or not any(
         f.endswith(".parquet") for f in _walk_files(lineage_dir)
     ):
         return None
-    return spark.read.parquet(lineage_dir)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
 
 
 def _walk_files(d: str):

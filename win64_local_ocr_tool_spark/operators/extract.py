@@ -331,6 +331,46 @@ def extract_mega(docs: DataFrame, *, chunk_blocks: int = 200) -> DataFrame:
     )
 
 
+def split_by_size(
+    docs: DataFrame, mega_bytes: int
+) -> tuple[DataFrame, DataFrame]:
+    """The routing predicate of ``extract_all``: ``(normal_in, mega_in)``,
+    documents with payload size ``< mega_bytes`` and ``>= mega_bytes``.
+
+    - If ``docs`` carries the ``n_bytes`` ingest-metadata column
+      (``sources.with_ingest_metadata`` records it at ingest write;
+      the binaryFile source provides it for free), both sides filter on
+      that PLAIN LONG column — Catalyst pushes ``n_bytes < N`` /
+      ``n_bytes >= N`` into the parquet scan (PushedFilters + row-group
+      statistics pruning), so the mega side touches only row groups
+      that can contain a mega row (gated in tests/test_plans.py).
+    - Otherwise the predicate is ``length(html)``, which no format can
+      push below the scan.
+    """
+    n = F.lit(mega_bytes)
+    # NULL html counts as size 0 (routes to the normal path, where the
+    # empty/undecodable payload becomes a status='error' row) — a bare
+    # length(html) would be NULL and fail both comparisons, dropping
+    # the url
+    ln = F.coalesce(F.length(F.col("html")), F.lit(0))
+    if "n_bytes" not in docs.columns:
+        return docs.filter(ln < n), docs.filter(ln >= n)
+    # Three-way split so a NULL n_bytes row (mixed-vintage table: files
+    # written before the metadata column existed, read with schema
+    # merge) can never vanish from the output — NULL fails BOTH pushed
+    # comparisons, which would silently drop the url and break
+    # byte-identity. Known-size rows keep the pushed row-group-prunable
+    # filters; unknown rows take the legacy length(html) predicate
+    # (IsNull itself pushes, so on a healthy all-recorded table the two
+    # unknown scans prune to nothing).
+    nb = F.col("n_bytes")
+    unknown = docs.filter(nb.isNull())
+    return (
+        docs.filter(nb < n).unionByName(unknown.filter(ln < n)),
+        docs.filter(nb >= n).unionByName(unknown.filter(ln >= n)),
+    )
+
+
 def extract_all(
     docs: DataFrame,
     *,
@@ -348,48 +388,15 @@ def extract_all(
     ``mega_bytes=N``: documents with payload size ``>= N`` route through
     the distributed chunk path (``extract_mega``) so ONE document fans
     out across the cluster. This is for corpora carrying multi-MB
-    documents where a single payload would dominate a task.
-
-    Branch predicate, in preference order:
-
-    - If ``docs`` carries the ``n_bytes`` ingest-metadata column
-      (``sources.with_ingest_metadata`` records it at ingest write;
-      the binaryFile source provides it for free), both branches
-      filter on that PLAIN LONG column — Catalyst pushes
-      ``n_bytes < N`` / ``n_bytes >= N`` into the parquet scan
-      (PushedFilters + row-group statistics pruning), so the mega
-      branch's second scan touches only row groups that can contain a
-      mega row: effectively free on a corpus where mega pages are 1 in
-      10^3 (gated in tests/test_plans.py).
-    - Otherwise the predicate is ``length(html)``, which no format can
-      push below the scan — the honest price is one extra full scan,
-      which is why the distributed path is opt-in rather than default.
+    documents where a single payload would dominate a task. The split
+    is ``split_by_size``: without an ``n_bytes`` column the mega branch
+    costs one extra full scan, which is why the distributed path is
+    opt-in here and why ``pipeline.run_extraction`` probes for a mega
+    document before building it.
     """
     if mega_bytes is None:
         return extract_normal(docs)
-    n = F.lit(mega_bytes)
-    if "n_bytes" in docs.columns:
-        # Three-way split so a NULL n_bytes row (mixed-vintage table:
-        # files written before the metadata column existed, read with
-        # schema merge) can never vanish from the output — NULL fails
-        # BOTH pushed comparisons, which would silently drop the url
-        # and break byte-identity. Known-size rows keep the pushed
-        # row-group-prunable filters; unknown rows take the legacy
-        # length(html) predicate (IsNull itself pushes, so on a healthy
-        # all-recorded table the two unknown scans prune to nothing).
-        nb = F.col("n_bytes")
-        unknown = docs.filter(nb.isNull())
-        # NULL html counts as size 0 (routes to the normal path, where
-        # the empty/undecodable payload becomes a status='error' row) —
-        # a bare length(html) would be NULL and fail both comparisons,
-        # dropping the url
-        ln = F.coalesce(F.length(F.col("html")), F.lit(0))
-        normal_in = docs.filter(nb < n).unionByName(unknown.filter(ln < n))
-        mega_in = docs.filter(nb >= n).unionByName(unknown.filter(ln >= n))
-    else:
-        ln = F.coalesce(F.length(F.col("html")), F.lit(0))
-        normal_in = docs.filter(ln < n)
-        mega_in = docs.filter(ln >= n)
+    normal_in, mega_in = split_by_size(docs, mega_bytes)
     return extract_normal(normal_in).unionByName(
         extract_mega(mega_in, chunk_blocks=chunk_blocks)
     )

@@ -5,8 +5,9 @@ The Spark restatement of the reference's flagship flow
 
     documents ──(mega? no)──> mapInPandas(extract)            ─┐
               └─(mega? yes)─> chunk -> classify -> reassemble ─┴> extracted
-    extracted ── write parquet partitioned by partition_key (dynamic
-                 overwrite = idempotent per-partition rerun)
+    extracted ── rebalance by partition_key -> write parquet partitioned
+                 by it (dynamic overwrite = idempotent per-partition
+                 rerun; ~one file per key)
               ── lineage append: (stage, partition_key, n_rows,
                  n_errors, wall_ms, 'done', run_id, ts)
 
@@ -27,7 +28,7 @@ from .lineage import (
     read_lineage,
     with_partition_key,
 )
-from .operators.extract import extract_all
+from .operators.extract import extract_all, split_by_size
 
 STAGE_EXTRACT = "extract"
 
@@ -107,15 +108,20 @@ def run_extraction(
     """Run the extraction pipeline.
 
     With ``out_dir`` set, writes the extracted table partitioned by
-    ``partition_key`` and appends lineage; returns stats. Without it,
-    returns the lazy extracted DataFrame (no materialization) — the
-    driver-contract path.
+    ``partition_key`` through ``staged.merge_by_key`` (one key-clustering
+    exchange of the extracted rows, ~one file per key) and appends
+    lineage; returns stats. Without it, returns the lazy extracted
+    DataFrame (no materialization) — the driver-contract path.
 
     ``mega_bytes`` defaults to 8 MiB: Arrow batches are bounded by ROW
     COUNT, so documents beyond a few MB must leave the batched normal
     path (a 256-row batch of 100 MB payloads would OOM a Python
     worker) and take the distributed chunk path, which also spreads a
-    single giant document across tasks (SURVEY §7.5 item 4).
+    single giant document across tasks (SURVEY §7.5 item 4). The
+    write path first probes for a document at/over the threshold (one
+    JVM-only job, the ``split_by_size`` predicate ``extract_all`` routes
+    on) and builds the mega branch only when one exists; otherwise the
+    plan is scan -> mapInPandas -> sink.
 
     ``commit_batches=K``: process the bucket keyspace in K groups, each
     written AND lineage-logged before the next starts — a SIGKILLed job
@@ -161,13 +167,13 @@ def run_extraction(
         fat_keys = _straggler_keys(spark, docs, lineage_dir)
     fine_mega = straggler_mega_bytes or max((mega_bytes or 0) // 8, 64 << 10)
 
-    def extract(subset):
+    def extract(subset, mega):
         sel = subset.select(*base_cols)
-        if fat_keys:
+        if fat_keys and mega is not None:
             keys = sorted(fat_keys)
             ext = extract_all(
                 sel.filter(~F.col("partition_key").isin(*keys)),
-                mega_bytes=mega_bytes,
+                mega_bytes=mega,
                 chunk_blocks=chunk_blocks,
             ).unionByName(
                 # straggler partitions: same kernels, finer dispatch —
@@ -180,16 +186,14 @@ def run_extraction(
                 )
             )
         else:
-            ext = extract_all(
-                sel, mega_bytes=mega_bytes, chunk_blocks=chunk_blocks
-            )
+            ext = extract_all(sel, mega_bytes=mega, chunk_blocks=chunk_blocks)
         # extract_all consumes (url, html); re-attach the key derivably
         # (no join — the key is a pure function of url).
         return with_partition_key(ext, n_buckets)
 
     if out_dir is None:
         return {
-            "extracted": extract(docs),
+            "extracted": extract(docs, mega_bytes),
             "pruned_partitions": n_pruned,
             "straggler_split_partitions": sorted(fat_keys),
         }
@@ -199,6 +203,16 @@ def run_extraction(
     k_groups = max(1, min(commit_batches or 1, len(todo_keys) or 1))
     step = -(-len(todo_keys) // k_groups) if todo_keys else 1
     groups = [todo_keys[i : i + step] for i in range(0, len(todo_keys), step)]
+
+    # Without a document at/over the finest routing threshold the mega
+    # branch is an empty second html scan, a chunker stage and a
+    # shuffle: drop it (the straggler split collapses with it). The
+    # lazy path above keeps the full plan: it promises not to run a job.
+    mega = mega_bytes
+    if mega is not None and groups:
+        probe_bytes = min(mega, fine_mega) if fat_keys else mega
+        if split_by_size(docs, probe_bytes)[1].isEmpty():
+            mega = None
 
     n_docs = n_errors = n_parts = 0
     wall_total = 0
@@ -214,7 +228,7 @@ def run_extraction(
         # parquet partition-overwrite otherwise (staged.merge_by_key)
         from .staged import merge_by_key
 
-        merge_by_key(extract(subset), out_dir)
+        merge_by_key(extract(subset, mega), out_dir)
         wall_ms = int((time.monotonic() - t0) * 1000)
         wall_total += wall_ms
 
@@ -455,22 +469,18 @@ def run_curation_staged(
         lin = read_lineage(spark, lineage_dir)
         if lin is not None:
             latest: dict[str, tuple] = {}
-            cols = ["stage", "n_rows", "ts", "run_id"]
-            has_fp = "fp" in lin.columns
             for r in (
                 lin.filter(
                     (F.col("status") == "done")
                     & F.col("stage").startswith("curate_")
                 )
-                .select(*cols, *(["fp"] if has_fp else []))
+                .select("stage", "n_rows", "ts", "run_id", "fp")
                 .collect()
             ):
                 name = r["stage"][len("curate_"):]
                 key = (r["ts"], r["run_id"] or "")
                 if name not in latest or key > latest[name][0]:
-                    latest[name] = (
-                        key, r["n_rows"], r["fp"] if has_fp else None
-                    )
+                    latest[name] = (key, r["n_rows"], r["fp"])
             done_stages = {
                 k: (int(v[1]), None if v[2] is None else int(v[2]))
                 for k, v in latest.items()

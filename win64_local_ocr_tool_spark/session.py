@@ -10,6 +10,8 @@ the driver entry all run with the same scale-aware settings:
   200 over-parallelizes small local runs; a real cluster job would set
   this to ~2-3x total cores or rely on AQE coalescing)
 - UTC session timezone (DuckDB-oracle comparability)
+- driver memory derived from host RAM (``default_driver_memory``),
+  overridable with ``SPARK_GRAFT_DRIVER_MEM``
 """
 
 from __future__ import annotations
@@ -17,6 +19,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's ``MemTotal``, at most 16g: in local mode the
+    driver JVM holds every task, and the other half stays for the
+    Python workers and the OS. A host without a readable ``MemTotal``
+    gets the 16g cap."""
+    cap_mib = 16 << 10
+    try:
+        with open(meminfo) as f:
+            kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mib}m"
+    return f"{min(kib // 2048, cap_mib)}m"
 
 
 def get_spark(
@@ -46,7 +64,10 @@ def get_spark(
         # Python worker's memory (html can be 100s of KB per row).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     if max_partition_bytes is not None:

@@ -9,9 +9,10 @@ granularity; a stage's output is reusable by other consumers (the
 blocks table IS the FIXTURES.md §3 schema).
 
 Trade-off vs the single-pass pipeline (``pipeline.run_extraction``):
-one extra table write/read plus ONE shuffle (groupBy url for assembly)
-in exchange for stage-level restart and inspectability. Both produce
-byte-identical output (tested).
+one extra table write/read plus ONE compute shuffle (groupBy url for
+assembly; every stage write also pays ``merge_by_key``'s key-clustering
+exchange) in exchange for stage-level restart and inspectability. Both
+produce byte-identical output (tested).
 """
 
 from __future__ import annotations
@@ -87,11 +88,16 @@ def merge_by_key(
       ``df.writeTo(target).overwritePartitions()`` — Iceberg's dynamic
       partition overwrite, the MERGE-shaped replace-matching-partitions
       commit with snapshot isolation and atomic metadata swap.
-    - **Parquet fallback** (this sandbox): dynamic partition-overwrite
-      write. Net semantics are identical for stage tables because every
-      stage write carries COMPLETE partitions: keys present in ``df``
-      are replaced, absent keys untouched, and re-running the same
-      write is idempotent (pytest: test_staged.py::test_merge_by_key*).
+    - **Parquet fallback** (no Iceberg catalog): ``rebalance(key_col)`` then a
+      dynamic partition-overwrite write. The rebalance is one exchange
+      of the written rows that leaves each key in about one task (AQE
+      splits a key bigger than the advisory partition size), so the
+      write makes ~one file per key instead of one per (task, key)
+      (SCALE.md has the file-count math at 10^12 docs). Net semantics
+      are identical for stage tables because every stage write carries
+      COMPLETE partitions: keys present in ``df`` are replaced, absent
+      keys untouched, and re-running the same write is idempotent
+      (pytest: test_staged.py::test_merge_by_key*).
 
     Both paths share this call site (and ``read_stage`` is the read
     twin), so swapping the runtime in/out of Iceberg changes no
@@ -109,12 +115,15 @@ def merge_by_key(
                 raise
             df.writeTo(target).partitionedBy(F.col(key_col)).create()
     else:
-        # per-write option: the replace-only-present-partitions contract
-        # must not depend on the session having been built by
-        # session.get_spark (Spark's default mode is static, which
-        # would wipe every other partition on each commit)
+        # rebalance by key: the hash distribution Iceberg's writer
+        # requests by default (write.distribution-mode=hash). Per-write
+        # option: the replace-only-present-partitions contract must not
+        # depend on the session having been built by session.get_spark
+        # (Spark's default mode is static, which would wipe every other
+        # partition on each commit)
         (
-            df.write.mode("overwrite")
+            df.hint("rebalance", key_col)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(key_col)
             .parquet(target)
